@@ -69,14 +69,17 @@ case class DedupConfig(
   // a url fail loudly inside the audit): disabling it means the caller
   // owns identity integrity entirely.
   idAuditRounds: Int = 3,
-  // serving-index layout: stored band rows are partitioned by
-  // pb = band·bandBuckets + (key mod bandBuckets), so an incremental
-  // search prunes the stored scan to the partitions its query batch
-  // actually touches (the reference's sub-linear bucket lookup,
-  // lsh.go:87-108, as PARTITION PRUNING instead of an in-memory map).
-  // The pb domain (bands·bandBuckets) bounds the driver-collected
-  // pruning set; 32·64 = 2048 partitions keeps per-partition files
-  // large at web scale while a 100-doc query batch touches ≲ 5%.
+  // serving-index layout: stored band rows carry the sort key
+  // pb = band·bandBuckets + (key mod bandBuckets) and are sorted by
+  // (pb, key) inside each Parquet file, so an incremental search pushes
+  // the pb values its query batch touches to the scan as a data filter
+  // and row-group/page statistics skip the rest (the reference's
+  // sub-linear bucket lookup, lsh.go:87-108, as statistics pushdown
+  // instead of an in-memory map). pb is not a directory partition:
+  // bandBuckets sizes only the pb domain (bands·bandBuckets) of the
+  // driver-collected IN list (32·64 = 2048 values; a q-doc query batch
+  // touches at most q·bands of them) — it does not change the number
+  // of files a put writes.
   bandBuckets: Int = 64,
   stopWords: Seq[String] = Nil) {
   require(minhashPerms == bands * rows,

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
 /**
- * Partitioned-Parquet batch store shared by the mutable signature
- * indexes ([[graft.ops.IncrementalIndex]], [[graft.lsh.ForestIndex]]):
+ * Partitioned-Parquet batch store shared by the mutable indexes
+ * ([[graft.ops.IncrementalIndex]], [[graft.ops.IvfIndex]],
+ * [[graft.lsh.ForestIndex]]):
  * per-batch `batch=<id>` partition directories, idempotent per-batch
  * overwrite (streaming replay safe), atomic directory-swap rewrite for
  * deletes, all metadata through the Hadoop FS API ([[Fs]]).
@@ -300,8 +301,10 @@ final class BatchStore(spark: SparkSession, root: String,
     // complete; interrupted swaps are finished by [[recoverBatchSwaps]]
     // on the next open. subPartitionCols land as partition DIRECTORIES
     // under the batch dir (batch=i/<col>=v/...), so reads filtered on
-    // them prune at the scan — the serving-index layout (see
-    // IncrementalIndex).
+    // them prune at the scan — the IvfIndex (cell) and ForestIndex (tb)
+    // serving layouts. Without them the caller's rows land in the
+    // caller's order: IncrementalIndex sorts its band rows by (pb, key)
+    // so Parquet statistics serve its pruning instead of directories.
     if (!Fs.exists(schemaPath, hconf)) {
       // full read-back schema = data columns + the dir-derived batch
       // col; published BEFORE any data can exist under root, so a store
@@ -376,11 +379,19 @@ final class BatchStore(spark: SparkSession, root: String,
   /** Atomic whole-store rewrite: `f(all())` lands in a temp dir, then a
     * directory swap commits — the read source is never the write
     * target, so cache eviction or a mid-write crash cannot destroy the
-    * store. The `batch` partition column must survive `f`. */
-  def rewrite(f: DataFrame => DataFrame): Unit = withLease {
+    * store. The `batch` partition column must survive `f`. The rows of
+    * each written file are sorted by `sortWithin` (after the partition
+    * columns): the clustering exchange below drops any order `f` had,
+    * so a store whose reads rely on a within-file order restates it. */
+  def rewrite(f: DataFrame => DataFrame,
+              sortWithin: Seq[String] = Nil): Unit = withLease {
+    import org.apache.spark.sql.functions.col
     val cols = "batch" +: subPartitionCols
-    // same files-per-partition-dir bound as the batch write path
-    f(all()).repartition(cols.map(org.apache.spark.sql.functions.col): _*)
+    // same files-per-partition-dir bound as the batch write path; the
+    // partitioned writer's own sort by `cols` is a prefix of this one,
+    // so it adds no second sort
+    f(all()).repartition(cols.map(col): _*)
+      .sortWithinPartitions((cols ++ sortWithin).map(col): _*)
       .write.mode("overwrite")
       .partitionBy(cols: _*).parquet(swapPath)
     // the rewrite changes per-batch counts (anti-join removes rows):

@@ -23,15 +23,20 @@ import graft.DedupPipeline.CorpusStats
  * batches' df-conditioned drop lists diverged).
  *
  * Scale shape: an insert touches only the new batch (signatures are
- * per-row); a search prunes the stored side to the band-bucket
- * partitions its query batch actually touches, then equi-joins — the
- * reference's sub-linear per-band bucket lookup (union of bucket
- * members, `/root/reference/lsh.go:87-108`) re-expressed as partition
- * pruning over a `pb = band·B + (key mod B)` directory layout instead
- * of an in-memory hash map. The pruning set is collected on the driver
- * but its DOMAIN is the fixed pb range (bands·bandBuckets ≤ a few
- * thousand), not the corpus, so the collect is constant-bounded at any
- * index size.
+ * per-row); a search restricts the stored side to the band buckets
+ * its query batch actually touches, then equi-joins — the reference's
+ * sub-linear per-band bucket lookup (union of bucket members,
+ * reference `lsh.go:87-108`) re-expressed as Parquet statistics
+ * pushdown instead of an in-memory hash map. `pb = band·B + (key mod
+ * B)` is a SORT key, not a directory partition: each batch's band rows
+ * are plain Parquet files under `bands/batch=<id>/`, sorted by
+ * (pb, key), so the search's `pb IN (…)` is a pushed data filter and
+ * row-group and page (column-index) min/max statistics skip the pb
+ * ranges the query does not touch. A put writes a handful of files
+ * however large the pb domain, and a read lists only batch dirs. The
+ * IN set is collected on the driver but its DOMAIN is the fixed pb
+ * range (bands·bandBuckets ≤ a few thousand), not the corpus, so the
+ * collect is constant-bounded at any index size.
  */
 class IncrementalIndex(spark: SparkSession, path: String,
                        cfg: DedupConfig = DedupConfig(),
@@ -44,17 +49,17 @@ class IncrementalIndex(spark: SparkSession, path: String,
   // resolved from the index path, so the index works on HDFS/S3-
   // compatible stores, not just the local filesystem
   private val store = new graft.ckpt.BatchStore(spark, s"$path/sigs")
-  // band-exploded serving rows (pb, key, doc_id), partitioned by pb
-  // under each batch dir — the searchable layout. Kept NEXT TO the
-  // signature store (not instead of it): verification needs shingles,
-  // and a remove rewrites both.
-  private val bandStore = new graft.ckpt.BatchStore(spark, s"$path/bands",
-    subPartitionCols = Seq("pb"))
+  // band-exploded serving rows (pb, key, doc_id), sorted by bandOrder
+  // inside each file of a batch dir — the searchable layout. Kept NEXT
+  // TO the signature store (not instead of it): verification needs
+  // shingles, and a remove rewrites both.
+  private val bandStore = new graft.ckpt.BatchStore(spark, s"$path/bands")
+  private val bandOrder = Seq("pb", "key")
   private val hconf = spark.sparkContext.hadoopConfiguration
 
-  /** Partition-bucket id of a band row: band·B + (key mod B). Encodes
-    * the band exactly (bucket < B), so (pb, key) equality ⇔
-    * (band, key) equality. */
+  /** Band-bucket id (the band files' sort key) of a band row: band·B +
+    * (key mod B). Encodes the band exactly (bucket < B), so (pb, key)
+    * equality ⇔ (band, key) equality. */
   private def pbCol(band: org.apache.spark.sql.Column,
                     key: org.apache.spark.sql.Column) =
     (band.cast("int") * cfg.bandBuckets +
@@ -184,7 +189,7 @@ class IncrementalIndex(spark: SparkSession, path: String,
       val sigs = resolveCrossBatchIds(raw)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        store.append(sigs, id => bandStore.writeBatch(bandRows(sigs), id))
+        store.append(sigs, writeBands(sigs, _))
         ()
       } finally { sigs.unpersist(); () }
     } finally graft.ckpt.Checkpoints.free(raw)
@@ -249,7 +254,7 @@ class IncrementalIndex(spark: SparkSession, path: String,
     }
 
   /** Band rows of signature rows, in the serving layout. `keep` carries
-    * extra columns through (the refit rewrite keeps `batch`). */
+    * extra columns through (the band rewrites keep `batch`). */
   private def bandRows(sigs: DataFrame, keep: Seq[String] = Nil): DataFrame = {
     import graft.lsh.Lsh
     sigs.select((col("doc_id") +:
@@ -260,6 +265,22 @@ class IncrementalIndex(spark: SparkSession, path: String,
       .select((pbCol(col("band"), col("key")).as("pb") +: col("key") +:
         col("doc_id") +: keep.map(col)): _*)
   }
+
+  /** Writes the band rows of `sigs` as band batch `id`, sorted by
+    * [[bandOrder]] within each file (the batch write keeps the order
+    * of the frame it is given). */
+  private def writeBands(sigs: DataFrame, id: Long): Unit =
+    bandStore.writeBatch(
+      bandRows(sigs).sortWithinPartitions(bandOrder.map(col): _*), id)
+
+  /** Atomic band-store rewrite that keeps [[bandOrder]] in every file. */
+  private def rewriteBands(f: DataFrame => DataFrame): Unit =
+    bandStore.rewrite(f, sortWithin = bandOrder)
+
+  /** Regenerates the whole band store from the signature store (one
+    * swap commit). */
+  private def regenerateBands(): Unit =
+    rewriteBands(_ => bandRows(store.all(), keep = Seq("batch")))
 
   /** Idempotent per-batch insert: writing batch `id` twice (streaming
     * replay after a failure — foreachBatch is at-least-once) overwrites
@@ -279,7 +300,7 @@ class IncrementalIndex(spark: SparkSession, path: String,
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         store.writeBatch(sigs, batchId)
-        bandStore.writeBatch(bandRows(sigs), batchId)
+        writeBands(sigs, batchId)
       } finally { sigs.unpersist(); () }
     } finally graft.ckpt.Checkpoints.free(raw)
     maybeAutoRefit()
@@ -289,25 +310,39 @@ class IncrementalIndex(spark: SparkSession, path: String,
     * band rows of any stored batch missing from the band store. Covers
     * (a) a crash between a put's two writes — the signature batch
     * landed, its band rows did not; (b) an index written before the
-    * band layout existed — one put upgrades it in place. Runs on the
-    * MUTATION paths only (it takes the band store's writer lease);
-    * [[search]] stays read-only by serving missing batches from band
-    * rows computed in-plan instead. Cost when consistent (always,
-    * outside those two cases): two directory listings, no Spark job.
-    * Band rows are DERIVED data (pure function of stored minhashes), so
-    * regeneration is idempotent and crash-safe to replay. */
+    * band layout existed — one put upgrades it in place; (c) a band
+    * store still in the legacy `batch=<id>/pb=<n>/` directory layout —
+    * the whole store is regenerated in the sorted layout BEFORE any new
+    * batch lands beside it (partition discovery fails on, or drops the
+    * pb column of, a tree mixing both layouts). Runs on the MUTATION
+    * paths only (it takes the band store's writer lease); [[search]]
+    * stays read-only by serving missing batches from band rows computed
+    * in-plan instead, and reads a legacy store as it is. Cost when
+    * consistent (always, outside those cases): three directory
+    * listings, no Spark job. Band rows are DERIVED data (pure function
+    * of stored minhashes), so regeneration is idempotent and crash-safe
+    * to replay (the rewrite is one swap commit). */
   private def reconcileBands(): Unit = {
     if (store.isEmpty) return
+    if (legacyBandLayout) regenerateBands()
     val have = bandStore.batchIds().toSet
     val missing = store.batchIds().filterNot(have)
     if (missing.nonEmpty) {
       val all = store.all()
-      missing.foreach { id =>
-        bandStore.writeBatch(
-          bandRows(all.filter(col("batch") === id)), id)
-      }
+      missing.foreach(id => writeBands(all.filter(col("batch") === id), id))
     }
   }
+
+  /** Whether the band store still has `pb=<n>` partition directories
+    * under its batch dirs. Every band rewrite is one swap commit, so
+    * the layout is uniform; batch dirs are probed until one holds data
+    * (an empty batch has neither layout's entries) — normally one
+    * listing. */
+  private def legacyBandLayout: Boolean =
+    bandStore.batchIds().iterator
+      .map(id => Fs.listNames(s"$path/bands/batch=$id", hconf))
+      .find(_.exists(n => n.startsWith("pb=") || n.endsWith(".parquet")))
+      .exists(_.exists(_.startsWith("pb=")))
 
   /**
    * Unified identity audit for the put paths (the batch pipeline's
@@ -447,7 +482,7 @@ class IncrementalIndex(spark: SparkSession, path: String,
       // rewrite — rewrite() would throw on the missing path — so the
       // layout is generated fresh from the re-signatured store instead
       reconcileBands()
-    else bandStore.rewrite(_ => bandRows(store.all(), keep = Seq("batch")))
+    else regenerateBands()
     Fs.swapInto(statsNextPath, statsPath, hconf)
     statsMemo = None // the stamp changed; drop the memo eagerly
   }
@@ -489,6 +524,7 @@ class IncrementalIndex(spark: SparkSession, path: String,
     * caller's frame being nondeterministic. */
   def remove(urls: DataFrame): Unit = {
     ensureClean()
+    reconcileBands()
     // a null removal url matches nothing in the semi/anti joins — the
     // remove would silently no-op (invariant 33); raise at marker
     // publication, before any store is touched
@@ -508,7 +544,7 @@ class IncrementalIndex(spark: SparkSession, path: String,
       // are bandless — unreachable by search — until the next replay
       val removedIds = store.all().join(u, Seq("url"), "left_semi")
         .select(col("doc_id"))
-      bandStore.rewrite(_.join(removedIds, Seq("doc_id"), "left_anti"))
+      rewriteBands(_.join(removedIds, Seq("doc_id"), "left_anti"))
     }
     store.rewrite(_.join(u, Seq("url"), "left_anti"))
     Fs.deleteIfExists(removePendingPath, hconf)
@@ -535,7 +571,7 @@ class IncrementalIndex(spark: SparkSession, path: String,
     // rewrites leaves stale band dirs for the merged batches — harmless
     // (their candidates die at the signature join, which only serves
     // surviving rows) and dropped by the next band rewrite.
-    bandStore.rewrite { bands =>
+    rewriteBands { bands =>
       bands.filter(col("batch") > upTo).unionByName(
         bandRows(store.all().filter(col("batch") <= upTo),
           keep = Seq("batch")))
@@ -546,13 +582,15 @@ class IncrementalIndex(spark: SparkSession, path: String,
     * band-key equi-join + exact Jaccard verify (reference `Search`
     * semantics, `index.go:215-255`, without top-k truncation). Queries
     * are signed with the stored corpus stats so band keys line up with
-    * the index. The stored side reads ONLY the `pb` partitions present
-    * in the query batch (PartitionFilters in the scan — sub-linear in
-    * the index size, like the reference's per-band bucket lookup); the
-    * pruning set's size is bounded by the fixed pb domain, never by
-    * the corpus. Falls back to a full band join on an index written
-    * before the band layout existed. Returns
-    * (query_url, match_url, jaccard). */
+    * the index. The stored band scan carries the query batch's `pb`
+    * values as a pushed Parquet filter (`PushedFilters: [In(pb, …)]`):
+    * band files are sorted by pb, so row-group and page statistics
+    * skip the data of every other pb — sub-linear in the index size at
+    * large batch sizes, like the reference's per-band bucket lookup. A
+    * batch smaller than one Parquet page is read whole. The IN set's
+    * size is bounded by the fixed pb domain, never by the corpus.
+    * Falls back to a full band join on an index written before the
+    * band layout existed. Returns (query_url, match_url, jaccard). */
   def search(pages: DataFrame): DataFrame = {
     var tries = 0
     while (tries < 3) {
@@ -582,7 +620,7 @@ class IncrementalIndex(spark: SparkSession, path: String,
   }
 
   /** The LAZY search frame — [[search]] without the refit-consistency
-    * validation, for plan inspection (PartitionFilters evidence) and
+    * validation, for plan inspection (PushedFilters evidence) and
     * specs; production callers want [[search]]. The frame pins the
     * query-signature snapshot for its lifetime (spec-scoped; the
     * serving path frees it per call). */
@@ -608,10 +646,10 @@ class IncrementalIndex(spark: SparkSession, path: String,
     ensureClean()
     import graft.lsh.Lsh
     // pin the query signatures before the driver collects the pruning
-    // set from them: the stored-side partition filter and the verify
+    // set from them: the stored-side pb filter and the verify
     // join below both re-evaluate this frame, and a nondeterministic
     // caller frame (sample, unordered limit) re-evaluated differently
-    // would probe partitions the filter already excluded — silent
+    // would probe pb values the filter already excluded — silent
     // misses. localCheckpoint materializes one snapshot that every
     // downstream plan reads (executor-local blocks: a lost executor
     // fails the query loudly rather than serving a partial answer).
@@ -653,7 +691,10 @@ class IncrementalIndex(spark: SparkSession, path: String,
             pbCol(col("band"), col("key")).as("pb"), col("key"))
         // the pruning set: distinct pb values in the query batch —
         // collect is bounded by the pb DOMAIN (bands·bandBuckets),
-        // a config constant, regardless of query or index size
+        // a config constant, regardless of query or index size. It
+        // reaches the stored scan as a pushed Parquet data filter (a
+        // partition filter on a legacy pb= directory store, which
+        // search reads as it is until the next mutation upgrades it)
         val pbs = qb.select("pb").distinct().collect().map(_.getInt(0))
         // read-only repair: a batch whose band rows never landed (a put
         // crashed between its two writes) is served from band rows
@@ -670,7 +711,7 @@ class IncrementalIndex(spark: SparkSession, path: String,
             bandRows(stored.filter(
               col("batch").isin(missing.map(Long.box): _*))))
         // skip the predicate when the query batch touches every pb: it
-        // prunes nothing and a full-domain IN costs optimizer time
+        // skips nothing and a full-domain IN costs optimizer time
         (if (pbs.length < cfg.bands * cfg.bandBuckets)
            storedBands.filter(col("pb").isin(pbs.map(Int.box).toSeq: _*))
          else storedBands)

@@ -123,9 +123,9 @@ class Round4HardeningSpec extends AnyFunSuite with SparkSpec {
     // plan evidence from the LAZY frame: search() itself is snapshot-
     // validated (checkpoint-cut, no scan visible in its plan)
     val plan = idx2.searchPlan(Seq(("q", near)).toDF("url", "text"))
-      .queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*pb#\\d+ IN".r.findFirstIn(plan).isDefined,
-      s"upgraded store must serve the pruned path:\n${plan.take(4000)}")
+    assert(BandLayoutSpec.pushesPbIn(plan, dir),
+      s"upgraded store must serve the pruned path:\n" +
+        plan.queryExecution.executedPlan.toString.take(4000))
   }
 
   // ---- pending-remove marker ----

@@ -254,10 +254,12 @@ class Round4Spec extends AnyFunSuite with SparkSpec {
       .as[(String, String, Double)].collect().toSet
     assert(before === after)
     assert(before.map(t => (t._1, t._2)) === Set(("q1", "u1")))
-    // the regenerated band layout still serves pruned scans
-    val plan = idx.searchPlan(q).queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*pb#\\d+ IN".r.findFirstIn(plan).isDefined,
-      s"band layout lost its pb pruning across refit:\n${plan.take(4000)}")
+    // the regenerated band layout still serves pruned scans: the query's
+    // pb set is pushed to the stored band scan as a Parquet filter
+    val sp = idx.searchPlan(q)
+    assert(BandLayoutSpec.pushesPbIn(sp, dir),
+      s"band layout lost its pb pruning across refit:\n" +
+        sp.queryExecution.executedPlan.toString.take(4000))
   }
 
   test("a refit crash AFTER the marker publish is replayed by the next " +
@@ -314,23 +316,50 @@ class Round4Spec extends AnyFunSuite with SparkSpec {
 
   test("IncrementalIndex.search reads only the query's pb partitions " +
     "(PartitionFilters on the band store)") {
+    // pb is a sort key of the band files, not a directory partition: the
+    // query's pb set reaches the stored band scan as a pushed Parquet
+    // filter, and row-group statistics skip the pb ranges it misses
     import spark.implicits._
+    import BandLayoutSpec.{doc, tag, withSmallRowGroups}
     val tmp = s"${freshDir()}/idx"
-    val idx = new graft.ops.IncrementalIndex(spark, tmp)
-    def doc(p: String) = (1 to 60).map(i =>
-      p + ('a' + i % 26).toChar.toString * (1 + i / 26)).mkString(" ")
-    idx.put(Seq(("u1", doc("aa")), ("u2", doc("bb"))).toDF("url", "text"))
-    idx.put(Seq(("u3", doc("cc"))).toDF("url", "text"))
+    // a band batch spanning many row groups: 400 unrelated fillers
+    // beside u1/u2 (fillers share no token with them or with the query)
+    val fillers = (0 until 400).map(i => (s"f$i", doc("x" + tag(i))))
+    def index(dir: String, cfg: DedupConfig) = withSmallRowGroups {
+      val idx = new graft.ops.IncrementalIndex(spark, dir, cfg)
+      idx.put((Seq(("u1", doc("aa")), ("u2", doc("bb"))) ++ fillers).toDF("url", "text"))
+      idx.put(Seq(("u3", doc("cc"))).toDF("url", "text"))
+      idx
+    }
+    val idx = index(tmp, DedupConfig())
     val near = doc("aa").replace(" aah ", " changed ")
     val res = idx.search(Seq(("q1", near)).toDF("url", "text"))
     // plan evidence from the LAZY frame: search() itself is snapshot-
     // validated (checkpoint-cut, no scan visible in its plan)
     val plan = idx.searchPlan(Seq(("q1", near)).toDF("url", "text"))
-      .queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*pb#\\d+ IN".r.findFirstIn(plan).isDefined,
-      s"no pb partition pruning in stored band scan:\n${plan.take(6000)}")
+    assert(BandLayoutSpec.pushesPbIn(plan, tmp),
+      s"no pb filter pushed to the stored band scan:\n" +
+        plan.queryExecution.executedPlan.toString.take(6000))
+    // read bound: the band scan outputs only the row groups whose pb
+    // range holds a query pb — below the stored band rows
+    val planned = plan.collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val read = BandLayoutSpec.bandScans(plan, tmp)
+      .map(_.metrics("numOutputRows").value).sum
+    val stored = spark.read.parquet(s"$tmp/bands").count()
+    assert(read > 0 && read < stored, s"band scan read $read of $stored stored rows")
+    info(s"band scan read $read of $stored stored band rows")
     val m = res.select("query_url", "match_url")
       .as[(String, String)].collect().toSet
     assert(m === Set(("q1", "u1")))
+    assert(planned === m)
+    // the same corpus under bandBuckets = 1: the query touches every pb
+    // (one per band), so that search carries no pb predicate at all
+    val full = s"${freshDir()}/idx"
+    val unpruned = index(full, DedupConfig(bandBuckets = 1))
+    assert(!BandLayoutSpec.pushesPbIn(
+      unpruned.searchPlan(Seq(("q1", near)).toDF("url", "text")), full))
+    val um = unpruned.search(Seq(("q1", near)).toDF("url", "text"))
+      .select("query_url", "match_url").as[(String, String)].collect().toSet
+    assert(m === um, "pruned matches differ from the unpruned search")
   }
 }

@@ -82,6 +82,7 @@ case class DedupConfig(
   // of files a put writes.
   bandBuckets: Int = 64,
   stopWords: Seq[String] = Nil) {
+  require(chainWidth >= 1, s"chainWidth must be >= 1, got $chainWidth")
   require(minhashPerms == bands * rows,
     s"signature length $minhashPerms must equal bands*rows (${bands * rows}); " +
       "reference panics likewise, /root/reference/lsh.go:124-127")
@@ -351,10 +352,10 @@ object DedupPipeline {
     // 10^12-doc operating point the df>minDf shingle population is
     // 10^9-10^10 rows, which stays on the executors.
     // three PRIMITIVE-column branches into ONE aggregation (optimization
-    // round): the previous combined statsEntries kernel materialised an
-    // InternalRow object per entry (~66M tiny allocations per bench
-    // pass, the stats stage's dominant CPU after the exchange). Each
-    // branch explodes a primitive long column (tf.term via
+    // round): the previous combined per-doc entry-array kernel
+    // materialised an InternalRow object per entry (~66M tiny
+    // allocations per bench pass, the stats stage's dominant CPU after
+    // the exchange). Each branch explodes a primitive long column (tf.term via
     // GetArrayStructFields, shingles directly) with the kind as a
     // CONSTANT — all codegen, zero per-entry objects; the union feeds
     // the same single (kind, id) hash aggregation, so the stage still

@@ -205,94 +205,6 @@ case class RandomProject(child: Expression, k: Int) extends UnaryExpression {
 }
 
 /**
- * `pairGen(members)` — per-bucket candidate-pair generator (LSH H3/H4).
- * Input: sorted Array(Struct(skey: Long, id: Long)) — one LSH bucket's
- * members, ordered by signature sort-key. Output: Array(Struct(a, b)),
- * a < b. Buckets up to `maxBucket` emit all pairs; larger buckets emit
- * chain pairs (each member with its next `chainWidth` neighbours in
- * skey order, so near-identical docs stay connected) — O(n·chainWidth)
- * instead of O(n²), the hot-bucket skew bound of the north rule.
- */
-case class PairGen(child: Expression, maxBucket: Int, chainWidth: Int,
-                   dropAbove: Int = Int.MaxValue)
-  extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("a", LongType, nullable = false),
-      StructField("b", LongType, nullable = false))),
-    containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    PairGen.gen(v.asInstanceOf[ArrayData], maxBucket, chainWidth, dropAbove)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.hash.PairGen.gen($c, $maxBucket, $chainWidth, $dropAbove)")
-  override protected def withNewChildInternal(c: Expression): PairGen = copy(child = c)
-  override def prettyName: String = "pair_gen"
-}
-
-object PairGen {
-  /** @param dropAbove buckets larger than this emit NO pairs — the
-    *   boilerplate bound: a key shared by more than `dropAbove` docs is
-    *   corpus-wide boilerplate, not a duplicate class (the substring
-    *   stage's hot-anchor case: one template sentence shared by ~100k
-    *   pages put 100k members through a single reducer, a measured
-    *   ~20 s straggler — and the resulting "pairs" would connect
-    *   unrelated pages on a common footer anyway). Callers wanting the
-    *   chain-pairing behaviour for large buckets (LSH bands, where the
-    *   df-conditioned shingle filter already bounds bucket meaning)
-    *   leave it at MaxValue. */
-  def gen(members: ArrayData, maxBucket: Int, chainWidth: Int,
-          dropAbove: Int = Int.MaxValue): ArrayData = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    val n = members.numElements()
-    if (n < 2 || n > dropAbove) return new GenericArrayData(Array.empty[Any])
-    // sort by (skey, id) with primitive longs — a sort_array over the
-    // struct array upstream (or a boxed comparator here) runs a boxing
-    // Ordering that stack-sampling showed dominating skewed-bucket
-    // reducers
-    val skeys = new Array[Long](n)
-    val ids = new Array[Long](n)
-    var i = 0
-    while (i < n) {
-      val r = members.getStruct(i, 2)
-      skeys(i) = r.getLong(0); ids(i) = r.getLong(1)
-      i += 1
-    }
-    HashKernels.sortByKeyThenVal(skeys, ids)
-    val out = new scala.collection.mutable.ArrayBuffer[Any](
-      if (n <= maxBucket) n * (n - 1) / 2 else n * chainWidth)
-    if (n <= maxBucket) {
-      i = 0
-      while (i < n) {
-        var j = i + 1
-        while (j < n) {
-          val x = ids(i); val y = ids(j)
-          if (x != y)
-            out += InternalRow(math.min(x, y), math.max(x, y))
-          j += 1
-        }
-        i += 1
-      }
-    } else {
-      // chain pairing in skey order (input arrives sorted by skey)
-      i = 0
-      while (i < n) {
-        var d = 1
-        while (d <= chainWidth && i + d < n) {
-          val x = ids(i); val y = ids(i + d)
-          if (x != y)
-            out += InternalRow(math.min(x, y), math.max(x, y))
-          d += 1
-        }
-        i += 1
-      }
-    }
-    new GenericArrayData(out.toArray)
-  }
-}
-
-/**
  * `filterNotIn(arr)` — drop array elements present in a (sorted) drop
  * list carried as a reference object; binary-search per element. Used
  * for df-conditioned shingling: corpus-hyper-frequent ("stop")
@@ -337,27 +249,6 @@ object FilterNotIn {
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(java.util.Arrays.copyOf(out, k))
   }
-}
-
-/** `statsEntries(tf, shingles)` → Array(Struct(kind: Int, id: Long)):
-  * the combined per-doc entry list for the single-job corpus-stats
-  * aggregation (term df + doc-count sentinel + shingle df in one
-  * shuffle). Codegen'd so the stats pass stays in whole-stage codegen. */
-case class StatsEntries(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("kind", IntegerType, nullable = false),
-      StructField("id", LongType, nullable = false))),
-    containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(tf: Any, sh: Any): Any =
-    HashKernels.statsEntries(tf.asInstanceOf[ArrayData], sh.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (t, s) => s"graft.hash.HashKernels.statsEntries($t, $s)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StatsEntries =
-    copy(left = l, right = r)
-  override def prettyName: String = "stats_entries"
 }
 
 /** `gaussianSketch(key, w)` → w · (l deterministic Gaussians keyed by
@@ -457,15 +348,8 @@ object HashFunctions {
     col(HashedTf(expr(tokens), numFeatures))
   def hashedShingles(tokens: Column, w: Int): Column =
     col(HashedShingles(expr(tokens), w))
-  def pairGen(members: Column, maxBucket: Int, chainWidth: Int,
-              dropAbove: Int = Int.MaxValue): Column =
-    col(PairGen(expr(members), maxBucket, chainWidth, dropAbove))
-  def cappedCollect(skey: Column, id: Column, cap: Int): Column =
-    col(CappedCollect(expr(skey), expr(id), cap).toAggregateExpression())
   def filterNotIn(arr: Column, dropSorted: Array[Long]): Column =
     col(FilterNotIn(expr(arr), dropSorted))
-  def statsEntries(tf: Column, shingles: Column): Column =
-    col(StatsEntries(expr(tf), expr(shingles)))
   def randomProject(entries: Column, k: Int): Column =
     col(RandomProject(expr(entries), k))
   def gaussianSketch(key: Column, w: Column, l: Int): Column =

@@ -76,50 +76,6 @@ object HashKernels {
     z ^ (z >>> 31)
   }
 
-  /** In-place sort of parallel long arrays by (key, val) — primitive
-    * quicksort + insertion tail, no boxed comparators (a boxed Ordering
-    * in the bucket pair generator dominated skewed-reducer CPU in
-    * stack samples). */
-  def sortByKeyThenVal(keys: Array[Long], vals: Array[Long]): Unit = {
-    def less(i: Int, j: Int): Boolean =
-      keys(i) < keys(j) || (keys(i) == keys(j) && vals(i) < vals(j))
-    def swap(i: Int, j: Int): Unit = {
-      val k = keys(i); keys(i) = keys(j); keys(j) = k
-      val v = vals(i); vals(i) = vals(j); vals(j) = v
-    }
-    def sort(lo: Int, hi: Int): Unit = {
-      if (hi - lo < 16) {
-        var i = lo + 1
-        while (i <= hi) {
-          var j = i
-          while (j > lo && less(j, j - 1)) { swap(j, j - 1); j -= 1 }
-          i += 1
-        }
-      } else {
-        val mid = lo + (hi - lo) / 2
-        if (less(mid, lo)) swap(lo, mid)
-        if (less(hi, lo)) swap(lo, hi)
-        if (less(hi, mid)) swap(mid, hi)
-        swap(mid, hi - 1) // median-of-3 pivot parked at hi-1
-        val p = hi - 1
-        var i = lo
-        var j = hi - 1
-        var done = false
-        while (!done) {
-          i += 1
-          while (less(i, p)) i += 1
-          j -= 1
-          while (j > lo && less(p, j)) j -= 1
-          if (i >= j) done = true else swap(i, j)
-        }
-        swap(i, hi - 1)
-        sort(lo, i - 1)
-        sort(i + 1, hi)
-      }
-    }
-    if (keys.length > 1) sort(0, keys.length - 1)
-  }
-
   // ---------------------------------------------------------------- minhash
 
   /**
@@ -242,30 +198,6 @@ object HashKernels {
       i += 1
     }
     new GenericArrayData(out.toArray)
-  }
-
-  /** Combined corpus-stats entries for the one-job df aggregation:
-    * (kind 0, term) per tf entry, one (kind 0, −1) doc sentinel, and
-    * (kind 1, shingle) per shingle — built in a single pass so the stats
-    * job needs no interpreted higher-order transforms. */
-  def statsEntries(tf: ArrayData, shingles: ArrayData): ArrayData = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    val nt = tf.numElements()
-    val ns = shingles.numElements()
-    val out = new Array[Any](nt + 1 + ns)
-    var i = 0
-    while (i < nt) {
-      out(i) = InternalRow(0, tf.getStruct(i, 2).getLong(0))
-      i += 1
-    }
-    out(nt) = InternalRow(0, -1L)
-    i = 0
-    while (i < ns) {
-      out(nt + 1 + i) = InternalRow(1, shingles.getLong(i))
-      i += 1
-    }
-    new GenericArrayData(out)
   }
 
   // -------------------------------------------------------------- winnowing
@@ -425,7 +357,7 @@ object HashKernels {
   // document, yet the inline loop re-drew all 64 Box–Muller Gaussians
   // (2 mix64 + log + sqrt + cos + sin per pair) for every (doc, term)
   // incidence — ~64 transcendental calls × terms × docs, the dominant
-  // signature-stage CPU (ProfileDedup). The cache computes each term's
+  // signature-stage CPU in profiles. The cache computes each term's
   // 64-vector ONCE and reuses it across documents.
   // BIT-EXACT: cached g(b) is the exact double the inline code produced
   // (same counters, same transcendental calls), and `acc(b) += w * g(b)`

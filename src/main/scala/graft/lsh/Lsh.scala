@@ -131,6 +131,7 @@ object Lsh {
   def simhashNeighborEdges(sigs: DataFrame, docId: String, sigCol: String,
                            tables: Int, width: Int, maxHamming: Int,
                            totalParts: Int = 0): DataFrame = {
+    require(width >= 1, s"simhashNeighborEdges width must be >= 1, got $width")
     val spark = sigs.sparkSession
     import spark.implicits._
     // totalParts = 1 is the no-seam oracle (single sorted scan) used by
@@ -236,12 +237,13 @@ object Lsh {
 
   /**
    * Candidate pairs from bucket-entry rows. Returns distinct (a, b),
-   * a < b. Single-pass design: ONE shuffle (groupBy band,key), bucket
-   * members collected sorted by `skey`, pairs emitted by the codegen'd
-   * [[graft.hash.PairGen]] expression — all-pairs for buckets up to
-   * `maxBucket`, skey-ordered chain pairs beyond (skew bound). The
-   * earlier windows+self-joins formulation scanned the bucket relation
-   * four times; this scans it once.
+   * a < b. One pass over the bucket relation: repartition by
+   * (band, key), one UnsafeRow partition sort by (band, key, skey, id),
+   * then [[PairStream]] walks each bucket in that order with
+   * O(maxBucket + chainWidth) state — all-pairs for buckets up to
+   * `maxBucket` participants, skey-ordered chain pairs (each member
+   * with its next `chainWidth`) beyond (skew bound). Rows with a null
+   * skey or id are dropped first: they never pair and never count.
    *
    * Chain pairing IS salted sub-bucketing: splitting a hot key into
    * ceil(n/maxBucket) salt groups in skey order plus bridge edges
@@ -250,38 +252,36 @@ object Lsh {
    * bridge join. AQE skew-join mitigation stays enabled as the backstop
    * (north rule).
    *
-   * `hardCap` bounds member collection on pathological mega-buckets
-   * (boilerplate shared by millions of pages) via [[graft.hash
-   * .CappedCollect]]: the aggregation BUFFER itself is capped at every
-   * partial- and final-agg site (a slice over collect_list would bound
-   * only the output and OOM the reducer at web scale), while the exact
-   * `total` keeps the drop observable. Members beyond the cap are
-   * dropped from pairing — such pages still dedup via the exact-hash
-   * stage.
+   * `hardCap` bounds pairing on pathological mega-buckets (boilerplate
+   * shared by millions of pages): only the first `hardCap` members in
+   * (skey, id) order participate, so the survivors are the cap
+   * smallest by (skey, id) under any input layout. Members beyond the
+   * cap are still counted but never paired — such pages still dedup
+   * via the exact-hash stage. Hot-key trade: a mega-bucket ships ALL
+   * its rows to one reducer, which scans them once with constant state
+   * (no OOM; the partition sort spills).
    *
    * `dropAbove` drops ENTIRE buckets whose true member count exceeds
    * it (corpus-wide boilerplate keys — their pairs would connect
-   * unrelated documents): an exact filter on the aggregate's total,
-   * costing no separate counting pass.
+   * unrelated documents), counted in the same scan with no separate
+   * counting pass.
+   *
+   * `chainWidth` and `hardCap` must be ≥ 1: a zero chain width divides
+   * by zero inside the task once a bucket outgrows `maxBucket`, and a
+   * zero cap silently pairs nothing.
    */
   def candidatePairs(buckets: DataFrame, docId: String,
                      maxBucket: Int, chainWidth: Int,
                      hardCap: Int = 100000,
                      dropAbove: Int = Int.MaxValue): DataFrame = {
+    require(chainWidth >= 1, s"candidatePairs chainWidth must be >= 1, got $chainWidth")
+    require(hardCap >= 1, s"candidatePairs hardCap must be >= 1, got $hardCap")
     import buckets.sparkSession.implicits._
     val skey: Column =
       if (buckets.columns.contains("skey")) col("skey") else col(docId)
-    // optimization round: repartition by (band, key) + ONE UnsafeRow
-    // partition sort + streaming pair generation ([[PairStream]])
-    // replaces the capped-collect ObjectHashAggregate — whose groups
-    // are overwhelmingly singletons, so it paid an object buffer +
-    // serde round-trip per bucket and fell back to sort-based
-    // aggregation anyway (measured 10 s → ~2 s on the 375k-doc bench
-    // candidate stage). Survivor/cap/drop semantics are IDENTICAL
-    // (PairStream scaladoc + Round6PairStreamSpec A/B): the sort puts
-    // members in (skey, id) order, so "first hardCap seen" IS
-    // CappedCollect's deterministic cap-smallest survivor set.
-    // Null skey/id rows are filtered (CappedCollect ignored them).
+    // the sort puts members in (skey, id) order, so PairStream's
+    // "first hardCap seen" is the deterministic cap-smallest survivor
+    // set (its scaladoc says why a stream, not a per-bucket aggregate)
     buckets
       .select(col("band").cast("int").as("band"),
         col("key").cast("long").as("key"),

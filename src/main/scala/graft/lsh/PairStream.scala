@@ -3,43 +3,35 @@ package graft.lsh
 /**
  * Streaming per-bucket candidate-pair generator over a SORTED bucket-row
  * iterator ((band, key, skey, id), ordered by (band, key, skey, id)) —
- * the optimization-round replacement for the collect-then-PairGen
- * aggregation in [[Lsh.candidatePairs]].
+ * the pairing step of [[Lsh.candidatePairs]].
  *
- * Why: the aggregation formulation pushed every bucket row through an
- * ObjectHashAggregate whose groups are OVERWHELMINGLY singletons
- * (~n·bands groups for n docs — random band keys collide rarely), so
- * the runtime cost was one object buffer allocation + serialize/
- * deserialize round-trip per GROUP, twice (partial + final), with the
- * object-hash operator falling back to sort-based aggregation past 128
- * in-memory groups anyway — measured 10 s of the 375k-doc bench's
- * candidate stage. The sorted-stream form pays ONE UnsafeRow sort
- * (already required to order members by skey) and emits pairs with
- * O(maxBucket + chainWidth) state, no per-group objects.
- *
- * SEMANTICS ARE IDENTICAL to capped_collect + PairGen (asserted by
- * Round6PairStreamSpec A/B on adversarial bucket shapes):
- *  - participants = the first `hardCap` members in (skey, id) order
- *    (sorted input ⇒ exactly CappedCollect's "cap smallest" survivors);
+ * Per (band, key) bucket:
+ *  - participants = the first `hardCap` members in (skey, id) order,
+ *    i.e. the cap smallest by (skey, id) whatever the input layout;
  *  - ≤ maxBucket participants → all pairs; more → chain pairs in skey
  *    order (each member with its next `chainWidth` neighbours);
  *  - buckets whose TRUE member count exceeds `dropAbove` emit nothing
  *    (the boilerplate bound; counting continues past hardCap);
- *  - rows with a null skey/id are filtered by the caller (CappedCollect
- *    ignored them inline);
- *  - pairs are (min, max), self-pairs skipped; downstream distinct()
- *    unchanged.
+ *  - rows with a null skey/id never reach it (the caller filters them,
+ *    so they neither pair nor count toward `dropAbove`);
+ *  - pairs are (min, max), self-pairs skipped; the caller's distinct()
+ *    removes pairs repeated across buckets.
+ * Round6PairStreamSpec checks the pair set against a plain-Scala
+ * oracle of these rules on adversarial bucket shapes.
+ *
+ * Why a stream: bucket groups are OVERWHELMINGLY singletons (~n·bands
+ * groups for n docs — random band keys collide rarely), so a per-bucket
+ * aggregate paid one object buffer allocation + serialize/deserialize
+ * round-trip per GROUP, twice (partial + final) — measured 10 s of the
+ * 375k-doc bench's candidate stage. The sorted-stream form pays ONE
+ * UnsafeRow sort (already required to order members by skey) and emits
+ * pairs with O(maxBucket + chainWidth) state, no per-group objects.
  *
  * Memory: the pair queue is released to the consumer only at group
  * completion when `dropAbove` is finite (a group can still be voided),
  * bounding it by maxBucket²/2 + dropAbove·chainWidth; with
  * dropAbove = MaxValue pairs stream out immediately past the
- * ≤ maxBucket buffering point. Hot-key note for the 100 TB shape: a
- * pathological mega-bucket now ships ALL its rows to one reducer
- * (scan-only, constant state — no OOM) instead of ≤ hardCap per map
- * task; the reducer cost is one pass over the key's rows, the same
- * order as the previous final-merge of map-capped buffers, and
- * `dropAbove` still voids boilerplate buckets without a counting pass.
+ * ≤ maxBucket buffering point.
  */
 private[lsh] final class PairStream(
     rows: Iterator[(Int, Long, Long, Long)],
@@ -101,7 +93,7 @@ private[lsh] final class PairStream(
 
   private def chainEmit(id: Long): Unit = {
     // pair the new member with its previous ≤ chainWidth participants —
-    // the same pair set as PairGen's forward (i, i+d) walk
+    // the same pair set as a forward (i, i+d), d ≤ chainWidth walk
     var d = 1
     while (d <= ringN) {
       emit(ringI(((ringPos - d) % chainWidth + chainWidth) % chainWidth), id)

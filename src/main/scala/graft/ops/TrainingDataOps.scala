@@ -149,15 +149,16 @@ object TrainingDataOps {
    * [[graft.lsh.Lsh.simhashBandKeys]]): the earlier 16×6 default
    * silently ALIASED bands 11-15 onto bits 2-31 (Java shift counts
    * mask mod 64), so the claimed 16-independent-band recall never
-   * held. Buckets are skew-bounded by the same capped single-pass
-   * machinery as the MinHash dedup path ([[graft.lsh
+   * held. Buckets are skew-bounded by the same streaming pair
+   * generator as the MinHash dedup path ([[graft.lsh
    * .Lsh.candidatePairs]]: all-pairs up to `maxBucket` members,
-   * skey-chain pairs beyond, aggregation buffers hard-capped) — a
-   * naive band self-join is Θ(n²/2^bits) per band on UNRELATED data
-   * (random 8-bit key collisions alone), and an all-identical-vector
-   * corpus would cross-join entirely without the cap. Ids must be
-   * 64-bit integers (the capped pair machinery collects primitive
-   * longs — the web-scale id contract everywhere in this library).
+   * skey-chain pairs beyond, pairing participants hard-capped per
+   * bucket) — a naive band self-join is Θ(n²/2^bits) per band on
+   * UNRELATED data (random 8-bit key collisions alone), and an
+   * all-identical-vector corpus would cross-join entirely without the
+   * cap. Ids must be 64-bit integers (the pair stream carries
+   * primitive longs — the web-scale id contract everywhere in this
+   * library). `chainWidth` must be ≥ 1.
    */
   def cosineNearDup(embeddings: DataFrame, idCol: String, vecCol: String,
                     tau: Double, tables: Int = 8, bits: Int = 8,
@@ -204,23 +205,30 @@ object TrainingDataOps {
     graft.hash.HashFunctions.simhash64(entries)
   }
 
-  /** @param maxBucket corpus members per (band, key) bucket beyond
-    *   which candidates are dropped (survivors = the cap smallest by
-    *   the PER-BAND salted key `xxhash64(band, id)`, selected inside
-    *   the aggregation buffer — [[graft.hash.CappedCollect]], DESIGN
-    *   invariant 37 — so each band drops an independent subset and a
-    *   neighbor survives if any band keeps it): a RAW band
-    *   equi-join is Θ(q·n/2^bits) on unrelated data from random key
-    *   collisions alone, and a hot bucket (mass-duplicated embeddings)
-    *   cross-joins every query against all of it — the same blowup
-    *   [[cosineNearDup]] routes through the capped machinery. The
-    *   default never binds at sane bucket sizes (8-bit keys spread a
-    *   10^9 corpus ~4M/bucket per band — size `bits` so n/2^bits stays
-    *   far below the cap); raise it for exhaustive recall. */
+  /** @param maxBucket corpus members kept per (band, key) bucket:
+    *   the `maxBucket` smallest by the PER-BAND salted key
+    *   `(xxhash64(band, id), id)`, selected by a `row_number` window
+    *   over the bucket (DESIGN invariant 37), so each band drops an
+    *   independent subset and a neighbor survives if any band keeps
+    *   it. A RAW band equi-join is Θ(q·n/2^bits) on unrelated data from
+    *   random key collisions alone, and a hot bucket (mass-duplicated
+    *   embeddings) cross-joins every query against all of it — the
+    *   same blowup [[cosineNearDup]] routes through the capped
+    *   machinery. At caps up to
+    *   `spark.sql.optimizer.windowGroupLimitThreshold` (1000) Spark
+    *   plans a partial `WindowGroupLimit` before the bucket exchange,
+    *   so each map task ships ≤ maxBucket rows per bucket; above it the
+    *   cap applies after the shuffle, and a hot key ships all its rows
+    *   to one reducer whose Sort and Window buffers spill (the same
+    *   trade [[graft.lsh.Lsh.candidatePairs]] documents). The default
+    *   never binds at sane bucket sizes (8-bit keys spread a 10^9
+    *   corpus ~4M/bucket per band — size `bits` so n/2^bits stays far
+    *   below the cap); raise it for exhaustive recall. Must be ≥ 1. */
   def lshTopK(embeddings: DataFrame, idCol: String, vecCol: String,
               queries: DataFrame, k: Int,
               tables: Int = 8, bits: Int = 8,
               maxBucket: Int = 4096): DataFrame = {
+    require(maxBucket >= 1, s"lshTopK maxBucket must be >= 1, got $maxBucket")
     import embeddings.sparkSession.implicits._
     def sig(vec: Column): Column = embeddingSig(vec)
     // zero-norm rows out per side BEFORE signatures: their cosine is
@@ -238,24 +246,26 @@ object TrainingDataOps {
       .select($"query_id", explode(
         graft.lsh.Lsh.simhashBandKeys($"qsig", tables, bits)).as("bk"))
       .select($"query_id", $"bk.band", $"bk.key")
-    // corpus buckets are capped BEFORE the query join (one partial-agg
-    // shuffle of ids): the join then fans out ≤ maxBucket members per
-    // query band instead of the bucket's true population. The cap's
-    // survivor key is a PER-BAND salted hash, not the bare id: capped
-    // survivors are the cap smallest by skey, and one id-ordered
-    // survivor set repeated in every band means a neighbor dropped
-    // from its hot bucket in one band is dropped in ALL of them at
-    // once — the banding recall bound assumes independent bands, and
-    // the salt restores that independence for the drop too (a
-    // neighbor survives if ANY band keeps it).
-    val buckets = cb.groupBy($"band", $"key")
-      .agg(graft.hash.HashFunctions.cappedCollect(
-        xxhash64($"band", $"neighbor_id"), $"neighbor_id", maxBucket).as("m"))
+    // corpus buckets are capped BEFORE the query join: the join then
+    // fans out ≤ maxBucket members per query band instead of the
+    // bucket's true population. The cap's survivor key is a PER-BAND
+    // salted hash, not the bare id: one id-ordered survivor set
+    // repeated in every band means a neighbor dropped from its hot
+    // bucket in one band is dropped in ALL of them at once — the
+    // banding recall bound assumes independent bands, and the salt
+    // restores that independence for the drop too (a neighbor
+    // survives if ANY band keeps it). Null ids neither survive nor
+    // take a survivor's place.
+    val capOrder = Window.partitionBy($"band", $"key")
+      .orderBy(xxhash64($"band", $"neighbor_id"), $"neighbor_id")
+    val buckets = cb.where($"neighbor_id".isNotNull)
+      .withColumn("rn", row_number().over(capOrder))
+      .where($"rn" <= maxBucket)
+      .select($"band", $"key", $"neighbor_id")
     // dedup on ids ONLY (round 1 distinct'd full vector payloads ×bands
     // through the shuffle), then re-join the vectors once per pair
     val cands = qb.join(buckets, Seq("band", "key"))
-      .select($"query_id", explode($"m.members").as("mm"))
-      .select($"query_id", $"mm.id".as("neighbor_id"))
+      .select($"query_id", $"neighbor_id")
       .filter($"query_id" =!= $"neighbor_id")
       .distinct()
     val scored = cands

@@ -229,11 +229,11 @@ object SuffixArrayStage {
     // Boilerplate anchors (a fingerprint shared by > hotAnchorDf docs is
     // a corpus-wide template sentence, not substring duplication — its
     // pairs would connect unrelated pages) are dropped INSIDE the bucket
-    // aggregation via candidatePairs' dropAbove: the capped-collect
-    // aggregate bounds every agg buffer at hotAnchorDf+1 members while
-    // counting the true df, so no separate anchor-cardinality counting
-    // shuffle + driver collect is needed (the previous shape paid a full
-    // ~(docs × anchors/doc)-row shuffle just to pre-drop hot keys).
+    // pass via candidatePairs' dropAbove: the pair stream pairs at most
+    // hotAnchorDf+1 members per bucket while counting the true df, so
+    // no separate anchor-cardinality counting shuffle + driver collect
+    // is needed (the previous shape paid a full ~(docs × anchors/doc)-row
+    // shuffle just to pre-drop hot keys).
     // winnowCtx carries a content sort key per anchor (the 4 chars
     // AFTER the shared k-gram, unsigned-packed): candidatePairs chains
     // oversized buckets in skey order, so a true pair — whose run

@@ -66,4 +66,16 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       plan.take(3000))
     assert(!plan.contains("ObjectHashAggregate"), plan.take(3000))
   }
+
+  test("lshTopK caps buckets with a row_number window, not a per-bucket " +
+    "object aggregation") {
+    import spark.implicits._
+    val vecs = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.9, 0.1))).toDF("id", "vec")
+    val plan = graft.ops.TrainingDataOps
+      .lshTopK(vecs, "id", "vec", vecs, 1, maxBucket = 8)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("ObjectHashAggregate"), plan.take(4000))
+    // at caps ≤ windowGroupLimitThreshold the limit also runs map-side
+    assert(plan.contains("WindowGroupLimit"), plan.take(4000))
+  }
 }

@@ -1,41 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.hash.HashKernels
 
 class Round2KernelSpec extends AnyFunSuite {
-
-  test("sortByKeyThenVal: matches boxed reference sort (incl. duplicates)") {
-    var seed = 42L
-    def next(): Long = { seed = HashKernels.mix64(seed); seed }
-    (0 until 200).foreach { round =>
-      val n = 1 + (next() >>> 33).toInt % 300
-      // small key range forces duplicate keys -> val tiebreak exercised
-      val mod = if (round % 2 == 0) 7L else Long.MaxValue
-      val keys = Array.fill(n)(next() % mod)
-      val vals = Array.fill(n)(next() % 13L)
-      val expect = keys.zip(vals).sortBy(identity).toSeq
-      HashKernels.sortByKeyThenVal(keys, vals)
-      assert(keys.zip(vals).toSeq === expect, s"round $round n=$n")
-    }
-  }
-
-  test("statsEntries: tf terms, doc sentinel, shingles in one array") {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    val tf = new GenericArrayData(Array[Any](
-      InternalRow(11L, 2), InternalRow(42L, 1)))
-    val sh = new GenericArrayData(Array[Any](100L, 200L, 300L))
-    val out = HashKernels.statsEntries(tf,
-      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(Array(100L, 200L, 300L)))
-    assert(out.numElements() === 2 + 1 + 3)
-    val rows = (0 until out.numElements()).map { i =>
-      val r = out.getStruct(i, 2); (r.getInt(0), r.getLong(1))
-    }
-    assert(rows === Seq((0, 11L), (0, 42L), (0, -1L),
-      (1, 100L), (1, 200L), (1, 300L)))
-  }
 
   test("FilterNotIn: all-hot input falls back to the full set") {
     import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData

@@ -4,14 +4,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ckpt.ParquetStageStore
 import graft.dimred.DimRed
-import graft.hash.{CappedCollect, HashFunctions}
+import graft.hash.HashFunctions
 import graft.lsh.LshForest
 import graft.ops.IncrementalIndex
 import graft.tfidf.{TfIdf, Vocabulary}
 
 /** Round-3 contracts: bounded driver footprint of the corpus-stats fit,
   * zero-vector projection semantics, Hadoop-FS portability of the
-  * operational surfaces, capped-collect null semantics, forest guards,
+  * operational surfaces, bucket-pairing null semantics, forest guards,
   * distributed dense-rank correctness at multi-partition scale. */
 class Round3Spec extends AnyFunSuite with SparkSpec {
 
@@ -162,19 +162,18 @@ class Round3Spec extends AnyFunSuite with SparkSpec {
     assert(r1("u3") === 8L, "non-colliding ids unchanged")
   }
 
-  test("capped_collect ignores null rows entirely — members AND total") {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.BoundReference
-    import org.apache.spark.sql.types.LongType
-    val agg = CappedCollect(
-      BoundReference(0, LongType, nullable = true),
-      BoundReference(1, LongType, nullable = true), cap = 2)
-    val b = agg.createAggregationBuffer()
-    agg.update(b, InternalRow(null, null))
-    agg.update(b, InternalRow(3L, 4L))
-    agg.update(b, InternalRow(5L, null))
-    assert(b.n === 1)
-    assert(b.total === 1L,
+  test("candidatePairs ignores null rows: they neither pair, take a " +
+    "hardCap slot, nor count toward dropAbove") {
+    import spark.implicits._
+    val rows = Seq[(Option[Long], Option[Long])](
+      (Some(3L), Some(4L)), (Some(5L), Some(6L)),
+      (None, None), (None, Some(1L)), (Some(1L), None), (Some(0L), None))
+    val buckets = rows.toDF("skey", "doc_id")
+      .select(lit(0).as("band"), lit(7L).as("key"), col("skey"),
+        col("doc_id"))
+    val pairs = graft.lsh.Lsh.candidatePairs(buckets, "doc_id", 64, 3,
+      hardCap = 2, dropAbove = 2).as[(Long, Long)].collect().toSet
+    assert(pairs === Set((4L, 6L)),
       "null rows contribute no pairs and must not count toward dropAbove")
   }
 

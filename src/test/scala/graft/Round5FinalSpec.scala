@@ -122,28 +122,39 @@ class Round5FinalSpec extends AnyFunSuite with SparkSpec {
         "threshold crossing, regardless of prior re-put row inflation")
   }
 
-  test("capped_collect survivors are the cap SMALLEST by (skey, id), " +
-    "independent of arrival/partition/merge order — the old " +
-    "append-until-full kept a run-dependent prefix, correlated across " +
-    "bands") {
+  test("lshTopK bucket survivors are the maxBucket SMALLEST by " +
+    "(xxhash64(band, id), id) in every band, independent of input " +
+    "order and partitioning") {
     import spark.implicits._
-    import graft.hash.HashKernels.mix64
-    val rows = (0L until 1000L).map(i => (1, mix64(i), i))
-    val expected = rows.map { case (_, s, i) => (s, i) }
-      .sorted.take(10).toSet
-    // same rows, three hostile layouts: reversed, 1 partition, 37
-    // partitions (different partial-agg merge trees)
-    for ((data, parts) <- Seq((rows, 37), (rows.reverse, 1),
-        (new scala.util.Random(7).shuffle(rows), 5))) {
-      val got = data.toDF("b", "skey", "id").repartition(parts)
-        .groupBy("b")
-        .agg(graft.hash.HashFunctions.cappedCollect(
-          col("skey"), col("id"), 10).as("m"))
-        .select(explode(col("m.members")).as("e"))
-        .select(col("e.skey"), col("e.id"))
-        .as[(Long, Long)].collect().toSet
-      assert(got === expected,
-        s"survivors must be the 10 smallest regardless of layout ($parts parts)")
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    // identical vectors share one bucket per band, so every band caps
+    // the whole corpus and the query (same vector) reaches exactly the
+    // union of the per-band survivors; k covers the corpus. Three rows
+    // with a null id ride along: they must not take a survivor's place
+    // (their band-1002 key sorts 2nd of the 200, so they would).
+    val v = graft.data.SyntheticVectors.vectorOf(42L, 16).toSeq
+    val ids: Seq[Long] = 0L until 200L
+    val tables = 8
+    val expected = (0 until tables).flatMap { t =>
+      val band = 1000 + t // Lsh.simhashBandKeys' band ids
+      ids.map(id => (XXH64.hashLong(id, XXH64.hashInt(band, 42L)), id))
+        .sorted.take(8).map(_._2)
+    }.toSet
+    assert(expected.size > 8, "bands must keep different survivors")
+    val queries = Seq((-1L, v)).toDF("id", "vec")
+    for ((order, parts) <- Seq((ids, 37), (ids.reverse, 1),
+        (new scala.util.Random(7).shuffle(ids), 5))) {
+      val corpus = (order.map(i => (Option(i), v)) ++
+          Seq.fill(3)((Option.empty[Long], v)))
+        .toDF("id", "vec").repartition(parts)
+      val got = graft.ops.TrainingDataOps
+        .lshTopK(corpus, "id", "vec", queries, ids.size, tables = tables,
+          maxBucket = 8)
+        .select("neighbor_id").as[Long].collect()
+      assert(got.length === got.toSet.size)
+      assert(got.toSet === expected,
+        s"survivors must be the 8 smallest per band regardless of layout " +
+          s"($parts parts)")
     }
   }
 
@@ -259,14 +270,34 @@ class Round5FinalSpec extends AnyFunSuite with SparkSpec {
     assert(causeChain(eU).contains("identity-less"))
   }
 
-  test("capped_collect rejects a non-positive cap at plan time " +
-    "(append-until-full silently collected nothing; the heap would " +
-    "read an empty root)") {
-    val e = intercept[IllegalArgumentException] {
-      graft.hash.HashFunctions.cappedCollect(
-        org.apache.spark.sql.functions.lit(1L),
-        org.apache.spark.sql.functions.lit(1L), 0)
-    }
-    assert(e.getMessage.contains("positive"))
+  test("zero chain widths and caps are rejected at plan time, before " +
+    "any job (a zero width divided by zero inside the task; a zero cap " +
+    "silently paired nothing)") {
+    import spark.implicits._
+    val buckets = Seq((1L, 0, 5L), (2L, 0, 5L)).toDF("doc_id", "band", "key")
+    val sigs = Seq((1L, 7L), (2L, 7L)).toDF("doc_id", "simhash")
+    val vecs = Seq((1L, Seq(1.0, 0.0))).toDF("id", "vec")
+    val group = "plan-time-rejection"
+    spark.sparkContext.setJobGroup(group, group)
+    try {
+      val rejected = Seq[(String, () => Any)](
+        "chainWidth" -> (() =>
+          graft.lsh.Lsh.candidatePairs(buckets, "doc_id", 64, chainWidth = 0)),
+        "hardCap" -> (() =>
+          graft.lsh.Lsh.candidatePairs(buckets, "doc_id", 64, 3, hardCap = 0)),
+        "width" -> (() =>
+          graft.lsh.Lsh.simhashNeighborEdges(sigs, "doc_id", "simhash",
+            tables = 4, width = 0, maxHamming = 3)),
+        "maxBucket" -> (() =>
+          graft.ops.TrainingDataOps.lshTopK(vecs, "id", "vec", vecs, 1,
+            maxBucket = 0)),
+        "chainWidth" -> (() => DedupConfig(chainWidth = 0)))
+      for ((name, call) <- rejected) {
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(s"$name must be >= 1"), e.getMessage)
+      }
+      assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group)
+        .isEmpty, "a rejection must not start a Spark job")
+    } finally spark.sparkContext.clearJobGroup()
   }
 }

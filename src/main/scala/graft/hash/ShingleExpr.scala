@@ -1,10 +1,8 @@
 package graft.hash
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.graft.Kernel.call
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -135,73 +133,35 @@ object ShingleKernels {
   }
 }
 
-/** `string_shingles(tokens, w)` → array<string>, distinct windows. */
-case class StringShingles(child: Expression, w: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    ShingleKernels.stringShingles(v.asInstanceOf[ArrayData], w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.hash.ShingleKernels.stringShingles($c, $w)")
-  override protected def withNewChildInternal(c: Expression): StringShingles =
-    copy(child = c)
-  override def prettyName: String = "string_shingles"
-}
-
-/** `string_shingle_count(tokens, w)` → int (= size(string_shingles)). */
-case class StringShingleCount(child: Expression, w: Int) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    ShingleKernels.stringShingleCount(v.asInstanceOf[ArrayData], w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.hash.ShingleKernels.stringShingleCount($c, $w)")
-  override protected def withNewChildInternal(c: Expression): StringShingleCount =
-    copy(child = c)
-  override def prettyName: String = "string_shingle_count"
-}
-
-/** `token_windows(tokens, n)` → array<string>: all n-token windows
-  * (non-distinct), space-joined; empty array for short docs. */
-case class TokenWindows(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    ShingleKernels.tokenWindows(v.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.hash.ShingleKernels.tokenWindows($c, $n)")
-  override protected def withNewChildInternal(c: Expression): TokenWindows =
-    copy(child = c)
-  override def prettyName: String = "token_windows"
-}
-
-/** `md5_prefix60(arr<string>)` → arr<long>: the SQL-portable 60-bit
-  * shingle id, fused (one digest call per element, no hex-string or
-  * decimal-string round-trip). */
-case class Md5Prefix60(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    ShingleKernels.md5Prefix60Array(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.hash.ShingleKernels.md5Prefix60Array($c)")
-  override protected def withNewChildInternal(c: Expression): Md5Prefix60 =
-    copy(child = c)
-  override def prettyName: String = "md5_prefix60"
-}
-
+/** Column-level API: one [[org.apache.spark.sql.graft.Kernel]] per
+  * shingle kernel. */
 object ShingleFunctions {
-  private def col(e: Expression): Column = ColumnBridge.column(e)
-  private def expr(c: Column): Expression = ColumnBridge.expression(c)
+  private val strings = ArrayType(StringType, containsNull = false)
+  private val stringsIn = ArrayType(StringType)
+
+  /** The kernel definitions, shared with the SQL registry. */
+  object Kernels {
+    val stringShingles = call(ShingleKernels, "stringShingles", strings,
+      stringsIn, IntegerType)
+    val stringShingleCount = call(ShingleKernels, "stringShingleCount",
+      IntegerType, stringsIn, IntegerType)
+    val tokenWindows = call(ShingleKernels, "tokenWindows", strings,
+      stringsIn, IntegerType)
+    val md5Prefix60 = call(ShingleKernels, "md5Prefix60Array",
+      ArrayType(LongType, containsNull = false), stringsIn)
+  }
+
+  /** Distinct w-token windows, see [[ShingleKernels.stringShingles]]. */
   def stringShingles(tokens: Column, w: Int): Column =
-    col(StringShingles(expr(tokens), w))
+    Kernels.stringShingles(tokens, w)
+  /** = size(stringShingles(tokens, w)). */
   def stringShingleCount(tokens: Column, w: Int): Column =
-    col(StringShingleCount(expr(tokens), w))
+    Kernels.stringShingleCount(tokens, w)
+  /** All n-token windows (non-distinct), space-joined; empty for short
+    * docs. */
   def tokenWindows(tokens: Column, n: Int): Column =
-    col(TokenWindows(expr(tokens), n))
-  def md5Prefix60(arr: Column): Column = col(Md5Prefix60(expr(arr)))
+    Kernels.tokenWindows(tokens, n)
+  /** The SQL-portable 60-bit shingle id per element, fused: one digest
+    * call each, no hex-string or decimal-string round trip. */
+  def md5Prefix60(arr: Column): Column = Kernels.md5Prefix60(arr)
 }

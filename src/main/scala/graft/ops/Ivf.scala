@@ -128,11 +128,17 @@ object Ivf {
     graft.hash.HashFunctions.ivfProbe(vec, centroids.flatten,
       centroids(0).length, nProbe)
 
+  /** `a` ranks strictly above `b`: NaN below every number. */
+  @inline private def above(a: Double, b: Double): Boolean =
+    a > b || (b.isNaN && !a.isNaN)
+
   /**
    * Static probe kernel shared by interpreted eval and generated code:
    * top-`nProbe` cells by dot(vec, centroid) — centroids are unit-norm,
    * so the ranking equals cosine ranking for any vec norm. Ties break
-   * to the lower cell id (insertion keeps first-seen). `isFloat`
+   * to the lower cell id (insertion keeps first-seen), and a NaN dot
+   * ranks below every number, so a non-finite vector still gets `nProbe`
+   * distinct cells (an all-NaN one gets 0, 1, …). `isFloat`
    * selects the element reader (embeddings are float arrays; derived
    * frames may have cast to double).
    */
@@ -148,7 +154,7 @@ object Ivf {
           "is a schema error)")
     val topCell = new Array[Int](p)
     val topDot = new Array[Double](p)
-    java.util.Arrays.fill(topDot, Double.NegativeInfinity)
+    var filled = 0
     var j = 0
     while (j < nCells) {
       var dot = 0.0
@@ -159,11 +165,12 @@ object Ivf {
         dot += x * flat(off + d)
         d += 1
       }
-      // insertion into the small descending top-p list; strict > keeps
-      // the earlier (lower) cell on ties
-      if (dot > topDot(p - 1)) {
-        var k = p - 1
-        while (k > 0 && dot > topDot(k - 1)) {
+      // insertion into the small descending top-p list: the first p
+      // cells always enter, and a strict `above` keeps the earlier
+      // (lower) cell on ties
+      if (filled < p || above(dot, topDot(p - 1))) {
+        var k = if (filled < p) { filled += 1; filled - 1 } else p - 1
+        while (k > 0 && above(dot, topDot(k - 1))) {
           topDot(k) = topDot(k - 1); topCell(k) = topCell(k - 1); k -= 1
         }
         topDot(k) = dot; topCell(k) = j

@@ -1,10 +1,8 @@
 package graft.text
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.graft.Kernel.call
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -89,40 +87,18 @@ object GoTokensUtil {
   }
 }
 
-/** `gotokens(text)` → array<string>: fused golower + `[\p{L}]+` run
-  * extraction (see [[GoTokensUtil.goTokens]]). */
-case class GoTokens(child: Expression) extends UnaryExpression {
-  import org.apache.spark.sql.types.ArrayType
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    GoTokensUtil.goTokens(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.text.GoTokensUtil.goTokens($c)")
-  override protected def withNewChildInternal(c: Expression): GoTokens = copy(child = c)
-  override def prettyName: String = "gotokens"
-}
-
 object GoTokens {
-  def gotokens(c: Column): Column =
-    ColumnBridge.column(GoTokens(ColumnBridge.expression(c)))
-}
+  val Tokenize = call(GoTokensUtil, "goTokens",
+    ArrayType(StringType, containsNull = false), StringType)
 
-/** Catalyst expression wrapper: codegen-friendly static call, stays inside
-  * whole-stage codegen (no UDF / no CodegenFallback). */
-case class GoLower(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    GoLowerUtil.goLower(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.text.GoLowerUtil.goLower($c)")
-  override protected def withNewChildInternal(c: Expression): GoLower = copy(child = c)
-  override def prettyName: String = "golower"
+  /** Fused golower + `[\p{L}]+` run extraction, see
+    * [[GoTokensUtil.goTokens]]. */
+  def gotokens(c: Column): Column = Tokenize(c)
 }
 
 object GoLower {
-  def golower(c: Column): Column =
-    ColumnBridge.column(GoLower(ColumnBridge.expression(c)))
+  val Fold = call(GoLowerUtil, "goLower", StringType, StringType)
+
+  /** Go's simple case fold, see [[GoLowerUtil.goLower]]. */
+  def golower(c: Column): Column = Fold(c)
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
  * (the latter dedups).
  *
  * Everything here is built from codegen'd Catalyst builtins plus the
- * [[GoLower]] expression — no UDFs, stays inside whole-stage codegen,
+ * [[GoLower]] kernel — no UDFs, stays inside whole-stage codegen,
  * fully distributed (per-row, no shuffle).
  */
 object TextKernel {

@@ -1,10 +1,8 @@
 package graft.text
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.graft.Kernel.call
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -47,43 +45,21 @@ object TokenStatsKernels {
   }
 }
 
-/** `sum_str_lens(tokens)` → double (integer-valued). */
-case class SumStrLens(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    TokenStatsKernels.sumStrLens(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.text.TokenStatsKernels.sumStrLens($c)")
-  override protected def withNewChildInternal(c: Expression): SumStrLens =
-    copy(child = c)
-  override def prettyName: String = "sum_str_lens"
-}
-
-/** `count_in(tokens)` → int membership count against a fixed word set
-  * carried as a reference object. */
-case class CountIn(child: Expression, words: Array[String])
-  extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  @transient private lazy val set = TokenStatsKernels.toSet(words)
-  override def nullSafeEval(v: Any): Any =
-    TokenStatsKernels.countIn(v.asInstanceOf[ArrayData], set)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("wordSet", TokenStatsKernels.toSet(words),
-      "java.util.HashSet<org.apache.spark.unsafe.types.UTF8String>")
-    defineCodeGen(ctx, ev,
-      c => s"graft.text.TokenStatsKernels.countIn($c, $ref)")
-  }
-  override protected def withNewChildInternal(c: Expression): CountIn =
-    copy(child = c)
-  override def prettyName: String = "count_in"
-}
-
+/** Column-level API: one [[org.apache.spark.sql.graft.Kernel]] per
+  * token-statistics kernel. */
 object TokenStats {
-  private def col(e: Expression): Column = ColumnBridge.column(e)
-  private def expr(c: Column): Expression = ColumnBridge.expression(c)
-  def sumStrLens(tokens: Column): Column = col(SumStrLens(expr(tokens)))
+  /** The kernel definitions, shared with the SQL registry. */
+  object Kernels {
+    val sumStrLens = call(TokenStatsKernels, "sumStrLens", DoubleType,
+      ArrayType(StringType))
+    val countIn = call(TokenStatsKernels, "countIn", IntegerType,
+      ArrayType(StringType), ObjectType(classOf[java.util.HashSet[_]]))
+  }
+
+  /** Σ length(token) as an integer-valued double. */
+  def sumStrLens(tokens: Column): Column = Kernels.sumStrLens(tokens)
+  /** Membership count against a fixed word set, carried as a reference
+    * object. */
   def countIn(tokens: Column, words: Array[String]): Column =
-    col(CountIn(expr(tokens), words))
+    Kernels.countIn(tokens, TokenStatsKernels.toSet(words))
 }

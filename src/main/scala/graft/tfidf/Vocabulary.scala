@@ -11,7 +11,7 @@ import org.apache.spark.sql.expressions.Window
  * position within doc second; a refit discards the old vocabulary.
  *
  * At web scale the stateless hashing trick (P5,
- * [[graft.hash.Murmur3Go]]) replaces the fitted vocabulary exactly as
+ * [[graft.hash.HashFunctions.murmur3go]]) replaces the fitted vocabulary exactly as
  * the reference intends (`vectorisers.go:215-230`); when a fitted
  * vocabulary IS wanted, the dense rank below is fully distributed.
  */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.graft.Kernel.call
 import org.apache.spark.sql.types._
 
 /**
@@ -20,7 +21,7 @@ import org.apache.spark.sql.types._
  * operation sequence of the Column formulation it replaces
  * (left-to-right fold order, same cast points, same NaN/null
  * semantics), so every oracle hash and rank tie-break is unchanged.
- * VectorKernelsSpec asserts kernel == legacy formulation on
+ * Round6KernelSpec asserts kernel == legacy formulation on
  * adversarial inputs (nulls, zero vectors, NaN/Inf components,
  * mismatched lengths, float and double arrays).
  */
@@ -213,31 +214,19 @@ case class ManhattanK(left: Expression, right: Expression)
   override def prettyName: String = "manhattan_k"
 }
 
-/** Jaccard over long-array sets: not null-padding-sensitive (inputs are
-  * containsNull=false shingle-id arrays), plain double result. */
-case class JaccardLongK(left: Expression, right: Expression)
-  extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.jaccardLong(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.verify.VectorKernels.jaccardLong($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-  override def prettyName: String = "jaccard_long_k"
-}
-
 object VectorFunctions {
-  private def col(e: Expression): Column = ColumnBridge.column(e)
-  private def expr(c: Column): Expression = ColumnBridge.expression(c)
-  def cosineDenseK(a: Column, b: Column): Column =
-    col(CosineDenseK(expr(a), expr(b)))
-  def euclideanK(a: Column, b: Column): Column =
-    col(EuclideanK(expr(a), expr(b)))
-  def manhattanK(a: Column, b: Column): Column =
-    col(ManhattanK(expr(a), expr(b)))
-  def jaccardLongK(a: Column, b: Column): Column =
-    col(JaccardLongK(expr(a), expr(b)))
+  private def pair(e: (Expression, Expression) => Expression)(a: Column,
+      b: Column): Column = ColumnBridge.column(
+    e(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
+  /** Jaccard over long-array sets (the containsNull = false shingle-id
+    * arrays): a plain static call, unlike the element-type-dispatching
+    * pair kernels above. */
+  val JaccardLong = call(VectorKernels, "jaccardLong", DoubleType,
+    ArrayType(LongType), ArrayType(LongType))
+
+  def cosineDenseK(a: Column, b: Column): Column = pair(CosineDenseK)(a, b)
+  def euclideanK(a: Column, b: Column): Column = pair(EuclideanK)(a, b)
+  def manhattanK(a: Column, b: Column): Column = pair(ManhattanK)(a, b)
+  def jaccardLongK(a: Column, b: Column): Column = JaccardLong(a, b)
 }

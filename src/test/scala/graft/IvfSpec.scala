@@ -66,6 +66,28 @@ class IvfSpec extends AnyFunSuite with SparkSpec {
       plan.take(2000))
   }
 
+  test("probe gives NaN and ±Inf vectors nProbe distinct cells: NaN dots " +
+    "rank below every number, ties go to the lower cell") {
+    import spark.implicits._
+    // unit codebook ±x, ±y: dots of (v0, v1) are (v0, v1, −v0, −v1)
+    val cents = Array(Array(1.0, 0.0), Array(0.0, 1.0),
+      Array(-1.0, 0.0), Array(0.0, -1.0))
+    val nan = Double.NaN
+    val inf = Double.PositiveInfinity
+    val cases = Seq(
+      Seq(1.0, 0.5) -> Seq(0, 1, 3),    // finite: the cells it always got
+      Seq(nan, 1.0) -> Seq(0, 1, 2),    // every dot NaN
+      Seq(nan, nan) -> Seq(0, 1, 2),
+      Seq(inf, 0.0) -> Seq(0, 2, 1),    // (Inf, NaN, −Inf, NaN)
+      Seq(-inf, 0.0) -> Seq(2, 0, 1),   // (−Inf, NaN, Inf, NaN)
+      Seq(1.0, -inf) -> Seq(3, 1, 0))   // (NaN, −Inf, NaN, Inf)
+    val got = cases.map(_._1).zipWithIndex.toDF("vec", "i")
+      .select(col("i"), Ivf.probe(col("vec"), cents, 3).as("cells"))
+      .as[(Int, Seq[Int])].collect().sortBy(_._1).map(_._2).toSeq
+    assert(got === cases.map(_._2))
+    got.foreach(c => assert(c.distinct.size === 3, s"duplicate cells $c"))
+  }
+
   // ---- mutable IVF serving index ----
 
   private def freshDir(): String =

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,16 +30,25 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     // non-foldable source (a local Seq would constant-fold to a
     // LocalTableScan before execution)
-    val df = spark.range(10)
-      .select(split(concat(lit("a b c d e f g h i "), $"id"), " ").as("t"))
+    val text = spark.range(10)
+      .select(concat(lit("a b c d e f g h i "), $"id").as("text"))
+    val chain = text
+      .select(split($"text", " ").as("t"))
       .select(graft.hash.HashFunctions.hashedShingles($"t", 5).as("sh"))
       .select(graft.hash.HashFunctions.minhash128($"sh").as("mh"))
-    val plan = df.queryExecution.executedPlan.toString
-    // "*(n)" marks operators inside a WholeStageCodegen stage in the
-    // string-rendered plan; the kernels must not break the span
-    assert(plan.contains("*(1) Project"), plan)
-    assert(!plan.contains("CodegenFallback"), plan)
-    df.collect() // and the generated code must actually compile + run
+    // one Project over every kernel
+    val all = text.select(KernelSpec.kernels(Array(1L), Array(1L),
+      Array(1.0)).map { case (n, k) => k.as(n) }: _*)
+    for (df <- Seq(chain, all)) {
+      val plan = df.queryExecution.executedPlan
+      // "*(n)" marks operators inside a WholeStageCodegen stage in the
+      // string-rendered plan; the kernels must not break the span
+      assert(plan.toString.contains("*(1) Project"), plan)
+      assert(!plan.toString.contains("CodegenFallback"), plan)
+      assert(plan.flatMap(_.expressions)
+        .forall(_.find(_.isInstanceOf[CodegenFallback]).isEmpty), plan)
+      df.collect() // and the generated code must actually compile + run
+    }
   }
 
   test("dedup pipeline plan has no cartesian product / nested loop join") {
